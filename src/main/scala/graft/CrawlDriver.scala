@@ -226,45 +226,6 @@ object CrawlDriver {
         .dropDuplicates("url_hash"),
       "metrics" -> Wave.metrics(cfg.runId, r.ledger)))
 
-  /** Run wave k (reading snapshot k, committing snapshot k+1),
-    * synchronously. Returns (fetched, extracted, frontierNext) counts.
-    * The resumable loop ([[run]]) uses the pipelined path instead. */
-  def runWave(
-      spark: SparkSession,
-      catalog: SnapshotCatalog,
-      pagesIdx: DataFrame,
-      k: Int,
-      cfg: RunConfig,
-      /** snapshot-0 constants — pass from [[run]] so the per-wave driver
-        * path doesn't re-open their parquet footers every wave. */
-      constants: Option[(DataFrame, DataFrame)] = None): (Long, Long, Long) = {
-    val t0 = System.nanoTime()
-    requireShardConfig(catalog, cfg)
-    val (r, newShards) = prepareWave(spark, catalog, pagesIdx, k, cfg, constants)
-    val planMs = (System.nanoTime() - t0) / 1000000L
-    // `fetched` is written FIRST and alone (commit warmFirst): its scan
-    // of the decision chain materializes the probe → confirm → decisions
-    // caches in one pass, so the five concurrent writes that follow read
-    // warm cache blocks instead of racing on uncomputed-partition locks.
-    // A useful write doubles as the warm-up — no standalone count job.
-    val budgets0 = constants.map(_._2).getOrElse(catalog.readTable(0, "budgets"))
-    val stateNext =
-      if (cfg.carryBudgets)
-        Some(nextBudgetState(budgets0, budgetState(catalog, k), r.fetched))
-      else None
-    val (loop, bulk) = waveTables(r, newShards, cfg, stateNext)
-    val counts = catalog.commit(k + 1, wave = k, tables = loop ++ bulk,
-      meta = Map("run_id" -> cfg.runId, "plan_ms" -> planMs.toString),
-      warmFirst = Some("fetched"))
-    val fetched = counts("fetched")
-    val extracted = counts("articles_delta")
-    r.cached.foreach(_.unpersist())
-    val totalMs = (System.nanoTime() - t0) / 1000000L
-    System.err.println(s"[wave $k] wall=${totalMs}ms (plan=${planMs}ms) " +
-      s"fetched=$fetched extracted=$extracted")
-    (fetched, extracted, counts("frontier"))
-  }
-
   /** Resume-aware PIPELINED loop: picks up from the latest committed
     * snapshot and stops early when the frontier drains.
     *
@@ -443,7 +404,6 @@ object CrawlDriver {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftPlanner.install(spark) // custom ShardedProbeExec on the hot path
 
     val synthCfg = SynthConfig.forTargetRows(nPages)
     // the corpus includes each host's /robots.txt page — the crawl

@@ -66,26 +66,15 @@ final class SnapshotCatalog(rootDir: String, spark: SparkSession) {
     * the manifest moved in last as the commit marker. Returns per-table
     * row counts (exact, from the committed parquet footers —
     * accumulator-free, so task retries or speculative execution can
-    * never inflate them).
-    *
-    * `warmFirst` names a table whose write job is run ALONE before the
-    * rest: a write that scans the wave's shared cache chain materializes
-    * every cache block in one pass, so the remaining writes read warm
-    * blocks instead of racing on uncomputed-partition locks (measured as
-    * tasks idling in lock waits). */
+    * never inflate them). */
   def commit(
       id: Int,
       wave: Int,
       tables: Map[String, DataFrame],
-      meta: Map[String, String] = Map.empty,
-      warmFirst: Option[String] = None): Map[String, Long] = {
+      meta: Map[String, String] = Map.empty): Map[String, Long] = {
     import scala.concurrent.Await
     import scala.concurrent.duration.Duration
-    val warm = warmFirst.filter(tables.contains).toSeq
-    val (ready, done) = commitAsync(id, wave,
-      loopTables = warm.map(n => n -> tables(n)).toMap,
-      bulkTables = tables -- warm, meta)
-    Await.result(ready, Duration.Inf)
+    val (_, done) = commitAsync(id, wave, loopTables = Map.empty, bulkTables = tables, meta)
     Await.result(done, Duration.Inf)
   }
 
@@ -119,12 +108,9 @@ final class SnapshotCatalog(rootDir: String, spark: SparkSession) {
 
     def writeOne(name: String, df: DataFrame): (String, Long, String) = {
       val dir = dest.resolve(name)
-      val tw0 = System.nanoTime()
       spark.sparkContext.setJobDescription(s"commit-$id/$name")
       df.write.mode("overwrite").parquet(dir.toString)
       spark.sparkContext.setJobDescription(null)
-      if (sys.env.contains("GRAFT_PHASE_TRACE"))
-        System.err.println(s"[commit $id] $name write=${(System.nanoTime() - tw0) / 1000000L}ms")
       val files = listDir(dir)
         .map(_.getFileName.toString)
         .filter(f => f.endsWith(".parquet"))

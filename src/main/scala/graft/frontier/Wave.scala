@@ -65,8 +65,8 @@ object Wave {
         * In-batch first-wins losers (same url_hash enqueued twice in
         * ONE wave — possible after a refresh collides with a stale
         * discovered entry; the committed frontier itself is deduped)
-        * are dropped inside the fused probe cogroup before flagging
-        * and are NOT ledger rows: "duplicate" means seen-set duplicate.
+        * are dropped inside the fused dedupe+probe operator before
+        * flagging and are NOT ledger rows: "duplicate" means seen-set duplicate.
         * So sum(statuses) counts distinct batch keys, not raw frontier
         * rows — the (rare) in-batch drop count is the difference. */
       ledger: DataFrame,
@@ -162,7 +162,7 @@ object Wave {
       /** Where to count per-host rows for salt derivation. The crawl
         * loop passes the COMMITTED frontier table: a slim parquet scan
         * makes the salt broadcast an independent query stage (it
-        * materializes concurrently with the probe cogroup instead of
+        * materializes concurrently with the seen probe instead of
         * serializing behind the whole decision chain — one less barrier
         * on the wave's critical path). Pre-gate counts are an upper
         * bound on post-gate rows; over-salting a host never breaks the
@@ -245,26 +245,14 @@ object Wave {
     // see robotsGate). Gate-vs-dedupe order is immaterial: duplicates
     // share a canonical url, hence a robots verdict.
     val (allowed, denied) = robotsGate(frontier, robots, cfg.robotsShuffleJoin)
-    // ONE cogroup fuses first-wins in-batch dedupe (W3) with the shard-
+    // ONE operator fuses first-wins in-batch dedupe (W3) with the shard-
     // aligned sketch probe (no broadcast state) — the wave's critical
-    // path pays a single frontier shuffle before budget enforcement.
+    // path pays a single frontier shuffle (+ Spark's spillable sort)
+    // before budget enforcement.
     // Persisted lazily: the commit's concurrent write jobs materialize
     // the caches (block-level cache locking dedupes concurrent computes).
-    val aSchema = allowed.schema // the gate's join may reorder columns
-    // fast path: the custom ShardedProbeExec physical operator
-    // (InternalRow-level — no encoder round-trip) when the session has
-    // the strategy installed; the Dataset-cogroup twin is the portable
-    // fallback and the reference semantics (ShardedProbePlanSpec pins
-    // row-identity between the two)
-    val probed0 =
-      if (graft.plans.GraftPlanner.installed(spark))
-        graft.plans.GraftPlanner.probeDedupe(allowed, shards.toDF(), nShards,
-          ShardedSeen.DefaultMaxShardBufferRows)
-      else ShardedSeen.probeDedupe(allowed, shards, nShards,
-        prioIdx = aSchema.fieldIndex("priority"),
-        kindIdx = aSchema.fieldIndex("kind"),
-        urlIdx = aSchema.fieldIndex("url"))
-    val probed = probed0.persist(DISK)
+    val probed = graft.plans.GraftPlanner.probeDedupe(allowed, shards.toDF(), nShards)
+      .persist(DISK)
     val flagged = ShardedSeen.confirmFlag(probed, seenExact).persist(DISK)
     val fresh = flagged.filter(!col("__dup")).drop("__dup")
     val dups = flagged.filter(col("__dup")).drop("__dup")
@@ -420,8 +408,8 @@ object Wave {
     * (stage, partition_id) — a row's counts all come from one physical
     * partition of one stage. Every count is a real aggregate over the
     * ledger plan (wave derived from the data, not lit(waveNo) — keeps
-    * wave plans codegen-cache identical); wave-level extracted/wall_ms
-    * live in the snapshot manifest, not here. */
+    * wave plans codegen-cache identical); the wave-level extracted count
+    * lives in the snapshot manifest (`articles_delta` rows), not here. */
   def metrics(runId: String, ledger: DataFrame): DataFrame = {
     def n(status: String) =
       sum(when(col("status") === status, 1L).otherwise(0L))

@@ -69,8 +69,8 @@ final case class HostBudget(host: String, tokens_per_round: Int)
 /** G4 per-partition wave metrics — every field is aggregated from the
   * wave's ledger plan (real lineage, no run-level literals); `stage`
   * names the physical stage whose partition decided the rows (budget /
-  * seen / robots); wave-level extracted/wall_ms live in the snapshot
-  * manifest. */
+  * seen / robots); the wave-level extracted count lives in the snapshot
+  * manifest (`articles_delta` rows; its meta holds run_id and plan_ms). */
 final case class CrawlMetrics(
     run_id: String,
     wave: Int,

@@ -118,19 +118,23 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("seen filter: shard-aligned cogroup probe, NO broadcast of seen state") {
+  test("seen filter: shard-aligned probe, NO broadcast of seen state") {
     // structural 10^10 gate: the sketch state reaches executors via a
-    // shard-keyed CoGroup (each task sees only its shards), never as a
-    // broadcast variable/join; the exact join sees only the maybe-slice
+    // shard-clustered exchange into the probe operator (each task sees
+    // only its shards), never as a broadcast variable/join; the exact
+    // join sees only the maybe-slice
     import spark.implicits._
     val seen = (1L to 100L).toDF("url_hash")
     val shards = graft.seen.ShardedSeen.updatedShards(
       graft.seen.ShardedSeen.emptyShards(spark), seen,
       spark.range(0).selectExpr("id as url_hash"), 1000, 2)
-    val frontier = (1L to 1000L).map(i => (i, s"u$i")).toDF("url_hash", "url")
-    val out = graft.seen.ShardedSeen.notSeen(frontier, seen, shards, 2)
+    val frontier = (1L to 1000L).map(i => (i, s"u$i", 0L, "detail"))
+      .toDF("url_hash", "url", "priority", "kind")
+    val out = graft.seen.ShardedSeen.confirmFlag(
+      graft.plans.GraftPlanner.probeDedupe(frontier, shards.toDF(), 2), seen)
     val plan = planOf(out)
-    assert(plan.contains("CoGroup"), s"probe must be shard-cogrouped:\n${plan.take(800)}")
+    assert(plan.contains("ShardedProbe") && plan.contains("pmod"),
+      s"probe must be shard-clustered:\n${plan.take(800)}")
     assert(!plan.contains("BroadcastHashJoin") && !plan.contains("BroadcastExchange"),
       s"seen state must never broadcast:\n${plan.take(800)}")
     assert(plan.contains("ShuffledHashJoin") || plan.contains("SortMergeJoin"),

@@ -276,7 +276,7 @@ class WaveSpec extends SparkSpec {
     // resuming with a different shard count must be refused (the state's
     // key space is pmod(url_hash, nShards))
     intercept[IllegalArgumentException] {
-      CrawlDriver.runWave(spark, catalog, idx2, catalog.latest.get,
+      CrawlDriver.run(spark, catalog, idx2,
         rc.copy(nWaves = catalog.latest.get + 1, nShards = 7))
     }
   }

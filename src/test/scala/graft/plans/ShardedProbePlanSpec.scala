@@ -1,11 +1,12 @@
 package graft.plans
 
 import graft.SparkSpec
+import graft.frontier.Wave
 import graft.seen.ShardedSeen
 import org.apache.spark.sql.functions._
 
 /** The custom probe operator must be plan-visible, broadcast-free and
-  * row-identical to the Dataset-cogroup reference implementation. */
+  * keep exactly [[Wave.dedupeInBatch]]'s winners. */
 class ShardedProbePlanSpec extends SparkSpec {
   import spark.implicits._
 
@@ -14,8 +15,7 @@ class ShardedProbePlanSpec extends SparkSpec {
       ShardedSeen.emptyShards(spark), keys.toDF("url_hash"),
       spark.range(0).selectExpr("id as url_hash"), cap, nShards)
 
-  test("custom exec ≡ cogroup path: same rows, same winners, same flags") {
-    GraftPlanner.install(spark)
+  test("custom exec ≡ dedupeInBatch winners, no false negatives, confirm ≡ left_anti") {
     val nShards = 4
     val seen = (1L to 400L).map(_ * 0x9e3779b97f4a7c15L)
     val shards = shardTable(seen, 2000, nShards).toDF()
@@ -28,53 +28,41 @@ class ShardedProbePlanSpec extends SparkSpec {
           new java.sql.Timestamp(0L)))
     }.toDF("url", "url_hash", "host", "biz", "kind", "wave", "priority", "discovered_ts")
 
-    val fast = GraftPlanner.probeDedupe(frontier, shards, nShards, 1000000L)
-    val slow = ShardedSeen.probeDedupe(frontier,
-      shards.as[graft.seen.SketchShard], nShards,
-      prioIdx = frontier.schema.fieldIndex("priority"),
-      kindIdx = frontier.schema.fieldIndex("kind"),
-      urlIdx = frontier.schema.fieldIndex("url"))
+    val probed = GraftPlanner.probeDedupe(frontier, shards, nShards)
 
-    // structural gates: custom exec present, co-partitioned exchanges,
-    // zero broadcast of sketch state
-    val plan = fast.queryExecution.executedPlan.toString()
+    // structural gates: custom exec present over Spark's sort,
+    // co-partitioned exchanges, zero broadcast of sketch state
+    val plan = probed.queryExecution.executedPlan.toString()
     assert(plan.contains("ShardedProbe"), plan.take(900)) // exec prints without the Exec suffix
+    assert(plan.contains("Sort [url_hash"), plan.take(900))
     assert(!plan.contains("BroadcastExchange"), plan.take(900))
     assert(plan.contains("pmod"), "frontier side must cluster on pmod(url_hash, n)")
 
-    val key = (r: org.apache.spark.sql.Row) =>
-      (r.getAs[Long]("url_hash"), r.getAs[String]("url"), r.getAs[Boolean]("__maybe"))
-    val a = fast.collect().map(key).sortBy(identity).toSeq
-    val b = slow.collect().map(key).sortBy(identity).toSeq
-    assert(a === b, "custom operator must match the cogroup reference exactly")
-    assert(a.size === 800, "one winner per url_hash")
+    val rows = (df: org.apache.spark.sql.DataFrame) =>
+      df.select(frontier.columns.map(col): _*).collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    val winners = rows(probed)
+    assert(winners === rows(Wave.dedupeInBatch(frontier)),
+      "winners must be dedupeInBatch's, row for row")
+    assert(winners.size === 800, "one winner per url_hash")
     // every seen key flagged maybe (no false negatives)
-    val flags = fast.collect().map(r =>
+    val flags = probed.collect().map(r =>
       r.getAs[Long]("url_hash") -> r.getAs[Boolean]("__maybe")).toMap
     seen.take(300).foreach(h => assert(flags(h), s"false negative on $h"))
-  }
-
-  test("buffer bound fails fast with an actionable message") {
-    GraftPlanner.install(spark)
-    val shards = shardTable(Seq(1L), 100, 1).toDF()
-    val frontier = (1L to 50L).map(i =>
-      (s"u$i", i, "h", "b", "detail", 0, 0L, new java.sql.Timestamp(0L)))
-      .toDF("url", "url_hash", "host", "biz", "kind", "wave", "priority", "discovered_ts")
-    val probe = GraftPlanner.probeDedupe(frontier, shards, 1, maxBufferRows = 10L)
-    val e = intercept[org.apache.spark.SparkException] { probe.count() }
-    assert(e.getMessage.contains("maxBufferRows") ||
-      Option(e.getCause).exists(_.getMessage.contains("maxBufferRows")))
+    // the crawl's two-stage seen filter ≡ an exact anti-join
+    val seenDf = seen.toDF("url_hash")
+    val fresh = ShardedSeen.confirmFlag(probed, seenDf).filter(!col("__dup"))
+    assert(rows(fresh) ===
+      rows(Wave.dedupeInBatch(frontier).join(seenDf, Seq("url_hash"), "left_anti")))
   }
 
   test("renamed/missing frontier column fails at plan construction, not execute") {
-    GraftPlanner.install(spark)
     val shards = shardTable(Seq(1L), 100, 1).toDF()
     val renamed = (1L to 5L).map(i =>
       (s"u$i", i, "h", "b", "detail", 0, 0L, new java.sql.Timestamp(0L)))
       .toDF("url", "url_hash", "host", "biz", "kind", "wave", "priority", "discovered_ts")
       .withColumnRenamed("priority", "prio")
     val e = intercept[IllegalArgumentException] {
-      GraftPlanner.probeDedupe(renamed, shards, 1, 1000000L) // no action issued
+      GraftPlanner.probeDedupe(renamed, shards, 1) // no action issued
     }
     assert(e.getMessage.contains("priority"), e.getMessage)
     // sketch side too: a shard table missing `bytes` is rejected up front
@@ -83,20 +71,19 @@ class ShardedProbePlanSpec extends SparkSpec {
         (1L to 5L).map(i =>
           (s"u$i", i, "h", "b", "detail", 0, 0L, new java.sql.Timestamp(0L)))
           .toDF("url", "url_hash", "host", "biz", "kind", "wave", "priority", "discovered_ts"),
-        shards.withColumnRenamed("bytes", "blob"), 1, 1000000L)
+        shards.withColumnRenamed("bytes", "blob"), 1)
     }
     assert(e2.getMessage.contains("bytes"), e2.getMessage)
   }
 
   test("works under whole-stage-codegen consumers and filters downstream") {
-    GraftPlanner.install(spark)
     val nShards = 2
     val seen = (1L to 50L).map(_ * 31L)
     val shards = shardTable(seen, 500, nShards).toDF()
     val frontier = (1L to 200L).map(i =>
       (s"u$i", i * 31L, "h", "b", "detail", 0, 0L, new java.sql.Timestamp(0L)))
       .toDF("url", "url_hash", "host", "biz", "kind", "wave", "priority", "discovered_ts")
-    val out = GraftPlanner.probeDedupe(frontier, shards, nShards, 1000000L)
+    val out = GraftPlanner.probeDedupe(frontier, shards, nShards)
       .filter(!col("__maybe"))
       .groupBy("kind").agg(count(lit(1)).as("n"))
     val n = out.collect().head.getLong(1)

@@ -1,6 +1,8 @@
 package graft.seen
 
 import graft.SparkSpec
+import graft.plans.GraftPlanner
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 class CuckooFilterSpec extends org.scalatest.funsuite.AnyFunSuite {
@@ -101,6 +103,18 @@ class ShardedSeenSpec extends SparkSpec {
     ShardedSeen.updatedShards(empty(spark), keys.toDF("url_hash"),
       spark.range(0).selectExpr("id as url_hash"), capacity, nShards)
 
+  /** The crawl's seen filter: the fused dedupe+probe operator, then the
+    * exact confirm of its maybe-slice; rows not already seen. */
+  private def notSeen(frontier: DataFrame, seenExact: DataFrame,
+      shards: Dataset[SketchShard], nShards: Int): DataFrame =
+    ShardedSeen.confirmFlag(
+      GraftPlanner.probeDedupe(frontier, shards.toDF(), nShards), seenExact)
+      .filter(!col("__dup")).drop("__dup")
+
+  /** Frontier rows (one per key) with the probe's key columns. */
+  private def frontierOf(keys: Seq[Long]): DataFrame =
+    keys.map(h => (h, s"u$h", 0L, "detail")).toDF("url_hash", "url", "priority", "kind")
+
   test("shard table build/update is executor-side and has no false negatives") {
     val keys = (1L to 5000L).map(_ * 2654435761L)
     val shards = build(keys, 5000, nShards = 8)
@@ -125,9 +139,8 @@ class ShardedSeenSpec extends SparkSpec {
     val seen = seenKeys.toDF("url_hash")
     val shards = build(seenKeys, 3000, nShards = 4)
     // frontier: half dupes, half new, extra payload column
-    val frontier = ((1L to 1500L) ++ (100001L to 101500L))
-      .map(i => (i * 0x9e3779b9L, s"u$i")).toDF("url_hash", "url")
-    val got = ShardedSeen.notSeen(frontier, seen, shards, 4)
+    val frontier = frontierOf(((1L to 1500L) ++ (100001L to 101500L)).map(_ * 0x9e3779b9L))
+    val got = notSeen(frontier, seen, shards, 4)
       .select("url_hash", "url").collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val want = frontier.join(seen, Seq("url_hash"), "left_anti")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
@@ -135,25 +148,14 @@ class ShardedSeenSpec extends SparkSpec {
     assert(got.size === 1500)
   }
 
-  test("probeDedupe fails fast (actionable message) when a shard slice overruns its buffer bound") {
-    val shards = build(Seq(1L), 100, nShards = 1)
-    val frontier = (1L to 50L)
-      .map(i => (i, s"u$i", 0L, "detail")).toDF("url_hash", "url", "priority", "kind")
-    val probe = ShardedSeen.probeDedupe(frontier.coalesce(1), shards, nShards = 1,
-      prioIdx = 2, kindIdx = 3, urlIdx = 1, maxBufferRows = 10L)
-    val e = intercept[org.apache.spark.SparkException] { probe.count() }
-    assert(e.getMessage.contains("maxBufferRows") ||
-      Option(e.getCause).exists(_.getMessage.contains("maxBufferRows")))
-  }
-
   test("notSeen result is identical across parallelism (4 vs 1 partitions)") {
     val seen = (1L to 500L).map(_ * 31L).toDF("url_hash")
     val shards = build((1L to 500L).map(_ * 31L), 500, nShards = 4)
-    val frontier = (1L to 2000L).map(i => (i * 31L, i)).toDF("url_hash", "id")
-    val a = ShardedSeen.notSeen(frontier.repartition(4), seen, shards, 4)
-      .select("id").as[Long].collect().sorted.toSeq
-    val b = ShardedSeen.notSeen(frontier.coalesce(1), seen, shards, 4)
-      .select("id").as[Long].collect().sorted.toSeq
+    val frontier = frontierOf((1L to 2000L).map(_ * 31L))
+    val a = notSeen(frontier.repartition(4), seen, shards, 4)
+      .select("url_hash").as[Long].collect().sorted.toSeq
+    val b = notSeen(frontier.coalesce(1), seen, shards, 4)
+      .select("url_hash").as[Long].collect().sorted.toSeq
     assert(a === b)
   }
 
@@ -170,9 +172,9 @@ class ShardedSeenSpec extends SparkSpec {
       assert(m(ShardedSeen.shardOf(h, 4)).mightContain(h)))
     // probe path: retracted keys flow as definitely-new even though the
     // exact table still lists them (the seen-keys view excludes them)
-    val frontier = retractKeys.map(h => (h, s"u$h")).toDF("url_hash", "url")
+    val frontier = frontierOf(retractKeys)
     val stillSeen = keys.toDF("url_hash") // stale exact table
-    val out = ShardedSeen.notSeen(frontier, stillSeen, retracted, 4)
+    val out = notSeen(frontier, stillSeen, retracted, 4)
     assert(out.count() === 100, "cuckoo delete must route around the exact join")
     // re-fetch re-inserts → seen again
     val reinserted = ShardedSeen.updatedShards(retracted,
