@@ -12,14 +12,18 @@ import org.apache.spark.sql.types._
   *
   *   dot += x*y; nx += x*x; ny += y*y   — sequential FLOAT accumulation
   *   sim = dot / (sqrtf(nx) * sqrtf(ny)) — separate single-precision
-  *   sqrts, FLOAT multiply and divide — then widened to DOUBLE.
+  *   sqrts, FLOAT multiply and divide;
+  *   sim = max(-1, min(sim, 1))          — NaN (a zero, underflowed or
+  *   overflowed norm) → -1, rounding overshoot past 1 → 1 — then
+  *   widened to DOUBLE.
   *
-  * Why this exists (round 6): the oracle-checked cosine queries
-  * (q_embed_threshold / q_embed_topk_r4 / q_embed_neardup_exact /
-  * q_ann_ivf_assign_r4) computed in f64, which is a DIFFERENT value in
-  * the last ulps — harmless until a score lands on a round(.,4)
-  * half-boundary, where the engines round to different 4th decimals and
-  * the oracle hash diverges (observed on regenerated sf data:
+  * These are the engine's only cosine kernels: every battery cosine
+  * (brute force, near-dup verify, IVF probe, the oracle twins) runs
+  * them. Why f32 (round 6): the oracle-checked cosine queries once
+  * computed in f64, which is a DIFFERENT value in the last ulps —
+  * harmless until a score lands on a round(.,4) half-boundary, where
+  * the engines round to different 4th decimals and the oracle hash
+  * diverges (observed on regenerated sf data:
   * 0.14864996 f64 vs 0.14865000 f32 → 0.1486 vs 0.1487). Replicating
   * the oracle's arithmetic makes the match structural instead of
   * data-lucky. Replication notes, each load-bearing:
@@ -30,7 +34,12 @@ import org.apache.spark.sql.types._
   *     correctly rounded and 53 ≥ 2·24+2, so the double→float double
   *     rounding is exact (Figueroa's theorem);
   *   - float multiplication is commutative bit-for-bit, so argument
-  *     order (query first or second) cannot matter.
+  *     order (query first or second) cannot matter;
+  *   - the clamp matches the reference's answers (measured on DuckDB
+  *     1.0.0): -1.0 for a zero vector and for an f32 norm that
+  *     underflows ([1e-30,0]) or overflows ([3e20,4e20]), 1.0 where the
+  *     bare loop gives 1.0000001. Unclamped, the NaN would sort above
+  *     every number in Spark and pass a `>= tau` filter.
   *
   * Both kernels take `array<float>` input and keep the repo's
   * loud-null malformed-input contract (null input / null element /
@@ -38,8 +47,8 @@ import org.apache.spark.sql.types._
   * [[DotMatrix]]). Interpreted eval and generated code share one
   * static method; the call stays inside whole-stage codegen.
   *
-  *   - [[CosineF32]]: cosine of two float-array COLUMNS (the pairwise
-  *     audit-block join);
+  *   - [[CosineF32]]: cosine of two float-array COLUMNS (near-dup
+  *     candidate verify, the audit-block join, the ad-hoc IVF probe);
   *   - [[CosineToMatrixF32]]: embedding → array of one f32 cosine per
   *     constant matrix row, row order preserved (1-row matrix = the
   *     driver-known query vector; 16-row = the IVF-twin centroids —
@@ -101,39 +110,25 @@ object CosineF32 {
       CosineF32(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   def toMatrix(c: Column, matrix: Seq[Seq[Float]]): Column = {
-    require(matrix.nonEmpty, "CosineToMatrixF32: matrix must be non-empty")
-    require(matrix.forall(_.length == matrix.head.length),
-      s"CosineToMatrixF32: matrix must be rectangular, got row lengths ${matrix.map(_.length).distinct}")
+    DotMatrix.requireShape("CosineToMatrixF32", matrix)
     ColumnBridge.column(CosineToMatrixF32(
       ColumnBridge.expression(c), matrix.map(_.toArray).toArray))
   }
 
-  private def wellFormed(arr: ArrayData, d: Int): Boolean = {
-    if (arr.numElements() != d) return false
-    var i = 0
-    while (i < d) { if (arr.isNullAt(i)) return false; i += 1 }
-    true
+  /** The reference's final step: one FLOAT divide, then the clamp
+    * (NaN → -1, see the class scaladoc), widened to DOUBLE. */
+  private def clamped(dot: Float, sqx: Float, sqy: Float): Double = {
+    val s = dot / (sqx * sqy)
+    (if (s > 1f) 1f else if (s >= -1f) s else -1f).toDouble
   }
 
-  /** Plain-Scala reference of the f32 loop over two float arrays —
-    * shared by both kernels and usable from specs as the independent
-    * replay. */
-  def cosineF32(x: Array[Float], y: Array[Float]): Double = {
-    var dot = 0.0f; var nx = 0.0f; var ny = 0.0f
-    var i = 0
-    while (i < x.length) {
-      val a = x(i); val b = y(i)
-      dot += a * b; nx += a * a; ny += b * b
-      i += 1
-    }
-    (dot / (math.sqrt(nx.toDouble).toFloat * math.sqrt(ny.toDouble).toFloat)).toDouble
-  }
+  private def sqrtF(x: Float): Float = math.sqrt(x.toDouble).toFloat
 
   /** Pairwise kernel body (null = malformed: length mismatch or null
     * element — LOUD, never silently wrong). */
   def cosine(a: ArrayData, b: ArrayData): java.lang.Double = {
     val d = a.numElements()
-    if (!wellFormed(b, d) || !wellFormed(a, d)) return null
+    if (!DotMatrix.wellFormed(b, d) || !DotMatrix.wellFormed(a, d)) return null
     var dot = 0.0f; var nx = 0.0f; var ny = 0.0f
     var i = 0
     while (i < d) {
@@ -141,8 +136,7 @@ object CosineF32 {
       dot += x * y; nx += x * x; ny += y * y
       i += 1
     }
-    java.lang.Double.valueOf(
-      (dot / (math.sqrt(nx.toDouble).toFloat * math.sqrt(ny.toDouble).toFloat)).toDouble)
+    java.lang.Double.valueOf(clamped(dot, sqrtF(nx), sqrtF(ny)))
   }
 
   /** Matrix kernel body: one f32 cosine per matrix row, row order
@@ -151,11 +145,11 @@ object CosineF32 {
   def cosines(arr: ArrayData, m: Array[Array[Float]]): ArrayData = {
     val n = m.length
     val dim = m(0).length
-    if (!wellFormed(arr, dim)) return null
+    if (!DotMatrix.wellFormed(arr, dim)) return null
     var nx = 0.0f
     var i = 0
     while (i < dim) { val x = arr.getFloat(i); nx += x * x; i += 1 }
-    val sqx = math.sqrt(nx.toDouble).toFloat
+    val sqx = sqrtF(nx)
     val out = new Array[Double](n)
     var j = 0
     while (j < n) {
@@ -167,7 +161,7 @@ object CosineF32 {
         dot += x * y; ny += y * y
         k += 1
       }
-      out(j) = (dot / (sqx * math.sqrt(ny.toDouble).toFloat)).toDouble
+      out(j) = clamped(dot, sqx, sqrtF(ny))
       j += 1
     }
     ArrayData.toArrayData(out)

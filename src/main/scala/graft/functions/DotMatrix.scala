@@ -91,10 +91,14 @@ object DotMatrix {
     * behavior returned bogus index 0), and a ragged one makes the
     * dim-mismatch null contract ambiguous. Checked once at plan
     * construction — the matrix is a plan literal. */
-  private def checkedMatrix(matrix: Seq[Seq[Double]]): Array[Array[Double]] = {
-    require(matrix.nonEmpty, "DotMatrix: matrix must be non-empty")
+  private[functions] def requireShape(name: String, matrix: Seq[Seq[Any]]): Unit = {
+    require(matrix.nonEmpty, s"$name: matrix must be non-empty")
     require(matrix.forall(_.length == matrix.head.length),
-      s"DotMatrix: matrix must be rectangular, got row lengths ${matrix.map(_.length).distinct}")
+      s"$name: matrix must be rectangular, got row lengths ${matrix.map(_.length).distinct}")
+  }
+
+  private def checkedMatrix(matrix: Seq[Seq[Double]]): Array[Array[Double]] = {
+    requireShape("DotMatrix", matrix)
     matrix.map(_.toArray).toArray
   }
 
@@ -117,7 +121,7 @@ object DotMatrix {
   /** True iff `arr` is well-formed for a dim-`d` matrix: exactly `d`
     * elements, none null. One cheap pass (bit-test per element) before
     * the multiply loops, so the hot loops stay null-check-free. */
-  private def wellFormed(arr: ArrayData, d: Int): Boolean = {
+  private[functions] def wellFormed(arr: ArrayData, d: Int): Boolean = {
     if (arr.numElements() != d) return false
     var i = 0
     while (i < d) { if (arr.isNullAt(i)) return false; i += 1 }

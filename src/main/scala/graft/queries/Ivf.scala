@@ -129,7 +129,7 @@ object Ivf {
       .crossJoin(broadcast(q))
       .filter(array_contains(col("__probes"), col("cell")))
       .select(col("vec_id"), col("cell"),
-        TextQueries.cosineCol(col("embedding"), col("qe")).as("cos_raw"))
+        graft.functions.CosineF32(col("embedding"), col("qe")).as("cos_raw"))
       .orderBy(col("cos_raw").desc, col("vec_id").asc)
       .limit(topK)
       .select(col("vec_id"), col("cell"), round(col("cos_raw"), 4).as("cos_sim"))
@@ -220,9 +220,8 @@ object Ivf {
     val slice = excludeId.fold(cand)(id => cand.filter(col("vec_id") =!= id))
     slice
       .select(col("vec_id"), col("cell").cast("int").as("cell"),
-        // r6: fused DotMatrix query-cosine kernel (the query vector is
-        // already driver-known here) — value-identical to the old
-        // cosineCol(embedding, typedLit(queryVec)) interpreted HOFs
+        // the query vector is driver-known here: the 1-row f32 matrix
+        // kernel, bit-identical to the pairwise one in [[topK]]
         TextQueries.cosineToQueryCol(col("embedding"), queryVec).as("cos_raw"))
       .orderBy(col("cos_raw").desc, col("vec_id").asc)
       .limit(topK)

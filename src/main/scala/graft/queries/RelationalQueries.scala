@@ -115,12 +115,14 @@ object RelationalQueries {
     // J4: semi join (the robots-allowed shape). r6 (guide §2.3): the r5
     // plan broadcast-built a hash relation over EVERY lineitem row;
     // distinct() first collapses the build side to the ~p_partkey key
-    // set with partial aggregation before anything is broadcast — same
-    // semi-join verdict per part row (membership is duplicate-blind).
+    // set with partial aggregation — same semi-join verdict per part row
+    // (membership is duplicate-blind). No broadcast hint: the size-based
+    // threshold still broadcasts a small key set, and a key set too big
+    // for one task's memory gets a shuffled join instead of an OOM.
     "q_semi_join" -> ((s, d) => {
       val keys = t(s, d, "lineitem").select(col("l_partkey")).distinct()
       t(s, d, "part").filter(col("p_size") >= 25)
-        .join(broadcast(keys), col("p_partkey") === col("l_partkey"), "left_semi")
+        .join(keys, col("p_partkey") === col("l_partkey"), "left_semi")
         .select(col("p_partkey"), col("p_brand"))
     }),
 

@@ -14,54 +14,21 @@ import org.apache.spark.sql.types.LongType
   * hash-based signatures (MinHash/SimHash/LSH — xxhash64 is Spark-
   * specific) are registered without oracles → driver rows-only check,
   * with semantics pinned by ScalaTest on planted near-duplicates.
+  * Every cosine, oracle-checked or not, is the oracle's own f32
+  * arithmetic ([[graft.functions.CosineF32]]).
   */
 object TextQueries {
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Cosine similarity of two float-array columns via higher-order
-    * functions — codegen-friendly, no UDF (SURVEY prompt: similarity
-    * search baseline). */
-  def cosineCol(a: Column, b: Column): Column = {
-    def dd(c: Column): Column = c.cast("double")
-    val dot = aggregate(zip_with(a, b, (x, y) => dd(x) * dd(y)), lit(0.0), (acc, v) => acc + v)
-    val na = sqrt(aggregate(transform(a, x => dd(x) * dd(x)), lit(0.0), (acc, v) => acc + v))
-    val nb = sqrt(aggregate(transform(b, x => dd(x) * dd(x)), lit(0.0), (acc, v) => acc + v))
-    dot / (na * nb)
-  }
-
-  /** ‖a‖₂ with [[cosineCol]]'s exact arithmetic (f32→f64 widening,
-    * index-order left-fold) — hoisted out so a side's norm is computed
-    * once instead of once per pair (r6 guide §1.2 step 2). */
-  def normCol(a: Column): Column =
-    sqrt(aggregate(transform(a, x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, v) => acc + v))
-
-  /** cos(embedding, q) for a DRIVER-KNOWN query vector q: the dot rides
-    * the fused [[graft.functions.DotMatrix]] codegen kernel (1-row
-    * matrix) and ‖q‖ is a literal computed with the same left-fold —
-    * value-identical to `cosineCol(emb, lit(q))` (EquivCheck + spec),
-    * ~10× cheaper than the interpreted per-row zip_with/aggregate
-    * lambdas (r6: q_embed_topk, IVF probe). */
-  def cosineToQueryCol(emb: Column, q: Seq[Float]): Column = {
-    val qd = q.map(_.toDouble)
-    var s = 0.0
-    qd.foreach(x => s += x * x)
-    val nq = math.sqrt(s)
-    val dot = element_at(graft.functions.DotMatrix(emb, Seq(qd)), 1)
-    dot / (normCol(emb) * lit(nq))
-  }
-
-  /** As [[cosineToQueryCol]] but in the ORACLE's single-precision
-    * arithmetic ([[graft.functions.CosineF32]] — DuckDB's
-    * list_cosine_similarity replicated bitwise). Used by every
-    * oracle-CHECKED cosine query (q_embed_threshold / q_embed_topk_r4 /
-    * q_embed_neardup_exact / q_ann_ivf_assign_r4) so the round(.,4)
-    * values match the oracle structurally instead of data-luckily; the
-    * rows-only production paths (q_embed_topk, IVF, LSH) keep the f64
-    * kernels their specs pin. */
-  def cosineToQueryF32Col(emb: Column, q: Seq[Float]): Column =
+  /** cos(embedding, q) for a DRIVER-KNOWN query vector q, in the
+    * oracle's single-precision arithmetic: the 1-row
+    * [[graft.functions.CosineF32.toMatrix]] kernel, bit-identical to
+    * `CosineF32(emb, lit(q))` (both accumulate in the same order) with
+    * q's norm computed once (brute-force top-k and threshold, the IVF
+    * probe). */
+  def cosineToQueryCol(emb: Column, q: Seq[Float]): Column =
     element_at(graft.functions.CosineF32.toMatrix(emb, Seq(q)), 1)
 
   private val Stopwords = Seq("the", "a", "of", "and", "to", "in")
@@ -158,12 +125,10 @@ object TextQueries {
 
     // ---- similarity search -----------------------------------------
     // brute-force cosine vs query vector, thresholded (oracle-checked).
-    // r6: the query vector is read once (a pushed-down point lookup) and
-    // the per-row cosine runs through a fused codegen kernel instead of
-    // interpreted zip_with/aggregate lambdas; oracle-checked, so the
-    // kernel is the f32 oracle replica (see cosineToQueryF32Col).
+    // The query vector is read once (a pushed-down point lookup) and the
+    // per-row cosine runs through the fused f32 kernel (see brutCos).
     "q_embed_threshold" -> ((s, d) => {
-      brutCosF32(t(s, d, "embeddings"))
+      brutCos(t(s, d, "embeddings"))
         .select(col("vec_id"), round(col("cos_raw"), 4).as("cos_sim"))
         .filter(col("cos_sim") >= 0.25)
     }),
@@ -183,7 +148,7 @@ object TextQueries {
     // passing q_embed_threshold oracle already proves the round-4
     // scores match), unlike the raw-float k-boundary ties above
     "q_embed_topk_r4" -> ((s, d) => {
-      brutCosF32(t(s, d, "embeddings"))
+      brutCos(t(s, d, "embeddings"))
         .select(col("vec_id"), round(col("cos_raw"), 4).as("cos_sim"))
         .orderBy(col("cos_sim").desc, col("vec_id").asc)
         .limit(10)
@@ -214,8 +179,8 @@ object TextQueries {
     // (N×16 rows) + window shuffle with a linear pass;
     // array_position(array_max) keeps the exact (cs desc, cid asc)
     // tie-break because the cs array is ordered by ascending cid.
-    // Oracle-checked, so the cosines come from the f32 oracle replica
-    // ([[graft.functions.CosineF32.toMatrix]]) and each round(.,4)
+    // The cosines come from the f32 oracle replica
+    // ([[graft.functions.CosineF32.toMatrix]]), so each round(.,4)
     // equals the oracle's bitwise.
     "q_ann_ivf_assign_r4" -> ((s, d) => {
       val e = t(s, d, "embeddings")
@@ -223,17 +188,10 @@ object TextQueries {
         .select(col("vec_id").cast("int").as("cid"), col("embedding"))
         .collect().sortBy(_.getInt(0))
       if (cRows.isEmpty) {
-        // empty-corpus fallback: the original plan shape (yields empty)
-        val c = e.filter(col("vec_id").between(1, 16))
-          .select(col("vec_id").cast("int").as("cid"), col("embedding").as("ce"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("vec_id")).orderBy(col("cs").desc, col("cid").asc)
-        e.crossJoin(broadcast(c))
-          .select(col("vec_id"), col("cid"),
-            round(cosineCol(col("embedding"), col("ce")), 4).as("cs"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-          .select(col("vec_id"), col("cid").as("cell"))
+        // no centroid: the oracle's cross join with an empty side
+        // returns no rows
+        s.emptyDataFrame.withColumn("vec_id", lit(0L))
+          .withColumn("cell", lit(0)).limit(0)
       } else {
         val mat: Seq[Seq[Float]] =
           cRows.toSeq.map(_.getSeq[Float](1).toSeq)
@@ -257,24 +215,16 @@ object TextQueries {
 
     // embedding-cosine near-dup pairs: candidates from the banded-bucket
     // self-join, deduped across bands, oversized buckets capped, then
-    // verified with exact cosine. Rows-only: hash buckets are Spark-
+    // verified with the pairwise f32 cosine kernel (the same one the
+    // oracle twin below runs). Rows-only: hash buckets are Spark-
     // specific; recall pinned in SimilaritySpec on planted near-dups.
     "q_embed_neardup" -> ((s, d) => {
       val e = t(s, d, "embeddings")
-      val pairs = annCandidatePairs(annBuckets(e))
-      // r6: each side's norm is computed once at the (small) join input
-      // instead of once per candidate pair — same arithmetic as
-      // cosineCol (dot / (na * nb)), value-identical
-      def dot(a: Column, b: Column): Column =
-        aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-          lit(0.0), (acc, v) => acc + v)
-      pairs
-        .join(e.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"),
-          normCol(col("embedding")).as("__na")), Seq("id_a"))
-        .join(e.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"),
-          normCol(col("embedding")).as("__nb")), Seq("id_b"))
+      annCandidatePairs(annBuckets(e))
+        .join(e.select(col("vec_id").as("id_a"), col("embedding").as("emb_a")), Seq("id_a"))
+        .join(e.select(col("vec_id").as("id_b"), col("embedding").as("emb_b")), Seq("id_b"))
         .select(col("id_a"), col("id_b"),
-          round(dot(col("emb_a"), col("emb_b")) / (col("__na") * col("__nb")), 4)
+          round(graft.functions.CosineF32(col("emb_a"), col("emb_b")), 4)
             .as("cos_sim"))
         .filter(col("cos_sim") >= 0.1)
     }),
@@ -290,12 +240,6 @@ object TextQueries {
     // from its per-bucket cap.
     "q_embed_neardup_exact" -> ((s, d) => {
       val e = t(s, d, "embeddings").filter(col("vec_id") % 10 === 0)
-      // oracle-checked → the pair cosine is the f32 oracle replica
-      // ([[graft.functions.CosineF32]]), one fused codegen kernel per
-      // pair. The f64 formulation (and its r6 norm hoist) rounded to a
-      // DIFFERENT 4th decimal whenever a score hit a half-boundary —
-      // the production twin q_embed_neardup keeps the f64 kernel its
-      // recall spec pins.
       e.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"))
         .crossJoin(broadcast(
           e.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"))))
@@ -368,31 +312,14 @@ object TextQueries {
       .otherwise("en")
 
   /** Brute-force cosine vs the `vec_id = 0` query vector, as
-    * `(vec_id, cos_raw)` over every other vector — r6 shared plan for
-    * the three q_embed_* queries: the query vector comes from ONE
-    * pushed-down point lookup (the Ivf.indexedTopK pattern) and the
-    * cosine is the fused [[cosineToQueryCol]] codegen kernel. Falls
-    * back to the r5 crossJoin shape when the corpus has no query row
-    * (yields the same empty result with the same schema). */
+    * `(vec_id, cos_raw)` over every other vector — the shared plan of
+    * q_embed_threshold, q_embed_topk and q_embed_topk_r4: the query
+    * vector comes from ONE pushed-down point lookup (the
+    * Ivf.indexedTopK pattern) and the cosine is the fused f32
+    * [[cosineToQueryCol]] kernel. Falls back to a crossJoin shape when
+    * the corpus has no query row (yields the same empty result with the
+    * same schema). */
   private def brutCos(e: DataFrame): DataFrame = {
-    val qRow = e.filter(col("vec_id") === 0).select(col("embedding")).head(1)
-    if (qRow.isEmpty) {
-      val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
-      e.filter(col("vec_id") =!= 0)
-        .crossJoin(broadcast(q))
-        .select(col("vec_id"), cosineCol(col("embedding"), col("qe")).as("cos_raw"))
-    } else {
-      e.filter(col("vec_id") =!= 0)
-        .select(col("vec_id"),
-          cosineToQueryCol(col("embedding"), qRow(0).getSeq[Float](0)).as("cos_raw"))
-    }
-  }
-
-  /** [[brutCos]] in the oracle's f32 arithmetic — the shared plan of the
-    * two oracle-CHECKED brute-cosine queries (threshold / topk_r4); the
-    * rows-only q_embed_topk stays on the f64 [[brutCos]] its spec and
-    * the IVF exactness proofs compare against. */
-  private def brutCosF32(e: DataFrame): DataFrame = {
     val qRow = e.filter(col("vec_id") === 0).select(col("embedding")).head(1)
     if (qRow.isEmpty) {
       val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
@@ -403,7 +330,7 @@ object TextQueries {
     } else {
       e.filter(col("vec_id") =!= 0)
         .select(col("vec_id"),
-          cosineToQueryF32Col(col("embedding"), qRow(0).getSeq[Float](0)).as("cos_raw"))
+          cosineToQueryCol(col("embedding"), qRow(0).getSeq[Float](0)).as("cos_raw"))
     }
   }
 
@@ -415,7 +342,7 @@ object TextQueries {
     * of exploding every shingle into a 16-min groupBy (one full shuffle
     * of the shingle set + interpreted HOF shingling, gone); the band
     * bucket hashing on top is unchanged builtins, so buckets are
-    * bit-identical (TextKernelsSpec + EquivCheck). */
+    * bit-identical (TextKernelsSpec pins the kernel). */
   def minhashBands(docs: DataFrame): DataFrame = {
     val sigs = docs
       .select(col("doc_id"), split(col("text"), "\\s+").as("toks"))
@@ -455,7 +382,8 @@ object TextQueries {
     * weights depend only on (plane, dim), so hashing them per row would
     * burn 64×dim hashes/vector for constants (at 10^10 vectors that's
     * the whole job). The matrix ships once in the plan (broadcast-sized:
-    * 64×dim doubles); dots are zip_with/aggregate — no UDF. */
+    * 64×dim doubles); dots are the fused [[graft.functions.DotMatrix]]
+    * kernel — no UDF. */
   def annBuckets(embeddings: DataFrame,
       nBands: Int = AnnBands, bitsPerBand: Int = AnnBitsPerBand): DataFrame = {
     val nPlanes = nBands * bitsPerBand
@@ -545,8 +473,8 @@ object TextQueries {
     * one fused codegen pass ([[graft.functions.WinnowFpsXx]]) — the
     * interpreted transform/slice/array_min lambdas (O(grams × window)
     * interpreted evals + an array copy per window) are gone; the
-    * fingerprint SET per document is identical (TextKernelsSpec +
-    * EquivCheck pin it). */
+    * fingerprint SET per document is identical (TextKernelsSpec pins
+    * it). */
   def winnow(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), split(col("text"), "\\s+").as("toks"))
       .filter(size(col("toks")) >= 5)

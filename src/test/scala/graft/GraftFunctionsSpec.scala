@@ -102,14 +102,16 @@ class GraftFunctionsSpec extends SparkSpec {
   }
 
   // independent replay of the oracle's single-precision cosine
-  // (sequential f32 accumulation, separate f32 sqrts — the DuckDB
-  // list_cosine_similarity loop), written as a fold, not a kernel call
+  // (sequential f32 accumulation, separate f32 sqrts, result clamped to
+  // [-1, 1] with NaN → -1 — the DuckDB list_cosine_similarity loop),
+  // written as a fold, not a kernel call
   private def cosF32Replay(a: Seq[Float], b: Seq[Float]): Double = {
     var dot = 0.0f; var nx = 0.0f; var ny = 0.0f
     a.indices.foreach { i =>
       dot += a(i) * b(i); nx += a(i) * a(i); ny += b(i) * b(i)
     }
-    (dot / (math.sqrt(nx.toDouble).toFloat * math.sqrt(ny.toDouble).toFloat)).toDouble
+    val s = dot / (math.sqrt(nx.toDouble).toFloat * math.sqrt(ny.toDouble).toFloat)
+    (if (s > 1f) 1f else if (s >= -1f) s else -1f).toDouble
   }
 
   test("CosineF32/CosineToMatrixF32 ≡ independent f32 replay, codegen'd, loud-null") {
@@ -121,22 +123,45 @@ class GraftFunctionsSpec extends SparkSpec {
     val vb = Array(0.4f, 0.6f, -0.1f, 0.2f)
     val vc = Array(1e-8f, 0.999f, -0.333f, 0.111f)
     val matrix: Seq[Seq[Float]] = Seq(vb.toSeq, vc.toSeq)
-    val dir = java.nio.file.Files.createTempDirectory("cosf32").toString
-    Seq((1L, va, vb), (2L, vc, vb), (3L, va, va))
-      .toDF("id", "x", "y").write.mode("overwrite").parquet(dir)
-    val df = spark.read.parquet(dir)
-    val got = df.select(col("id"),
-      graft.functions.CosineF32(col("x"), col("y")).as("c"),
-      graft.functions.CosineF32.toMatrix(col("x"), matrix).as("cm"))
-      .collect().sortBy(_.getLong(0))
-    val in = Seq((va, vb), (vc, vb), (va, va))
-    got.zip(in).foreach { case (r, (x, y)) =>
-      assert(r.getDouble(1) === cosF32Replay(x.toSeq, y.toSeq),
-        s"pairwise kernel must be bit-equal to the f32 replay for id ${r.getLong(0)}")
-      assert(r.getSeq[Double](2) ===
-        Seq(cosF32Replay(x.toSeq, vb.toSeq), cosF32Replay(x.toSeq, vc.toSeq)),
-        s"matrix kernel must be bit-equal per row for id ${r.getLong(0)}")
+    // DuckDB-parity rows (x, y, DuckDB 1.0.0's list_cosine_similarity):
+    // a zero vector, an f32 norm that underflows, one that overflows
+    // (all NaN unclamped → -1), and a self-cosine whose bare f32 loop
+    // gives 1.0000001 (→ 1)
+    val zero = Array(0f, 0f, 0f, 0f)
+    val under = Array(1e-30f, 0f, 0f, 0f)
+    val over = Array(3e20f, 4e20f, 0f, 0f)
+    val overshoot = Array(0.3f, -2.8f, 1.5f, 0.2f)
+    val parity = Seq((zero, vb, -1.0), (under, under, -1.0), (over, over, -1.0),
+      (overshoot, overshoot, 1.0))
+    val parityMatrix: Seq[Seq[Float]] = parity.map(_._2.toSeq)
+    val in = Seq((va, vb), (vc, vb), (va, va)) ++ parity.map(p => (p._1, p._2))
+    val rows = in.zipWithIndex.map { case ((x, y), i) => (i.toLong + 1, x, y) }
+    def check(df: org.apache.spark.sql.DataFrame): Array[org.apache.spark.sql.Row] = {
+      val got = df.select(col("id"),
+        graft.functions.CosineF32(col("x"), col("y")).as("c"),
+        graft.functions.CosineF32.toMatrix(col("x"), matrix).as("cm"),
+        graft.functions.CosineF32.toMatrix(col("x"), parityMatrix).as("cp"))
+        .collect().sortBy(_.getLong(0))
+      got.zip(in).foreach { case (r, (x, y)) =>
+        assert(r.getDouble(1) === cosF32Replay(x.toSeq, y.toSeq),
+          s"pairwise kernel must be bit-equal to the f32 replay for id ${r.getLong(0)}")
+        assert(r.getSeq[Double](2) ===
+          Seq(cosF32Replay(x.toSeq, vb.toSeq), cosF32Replay(x.toSeq, vc.toSeq)),
+          s"matrix kernel must be bit-equal per row for id ${r.getLong(0)}")
+      }
+      got.drop(3).zip(parity).zipWithIndex.foreach { case ((r, (_, _, duck)), i) =>
+        assert(r.getDouble(1) === duck,
+          s"pairwise kernel must return DuckDB's $duck for id ${r.getLong(0)}")
+        assert(r.getSeq[Double](3)(i) === duck,
+          s"matrix kernel must return DuckDB's $duck for id ${r.getLong(0)}")
+      }
+      got
     }
+    check(rows.toDF("id", "x", "y")) // LocalTableScan → interpreted eval
+    val dir = java.nio.file.Files.createTempDirectory("cosf32").toString
+    rows.toDF("id", "x", "y").write.mode("overwrite").parquet(dir)
+    val df = spark.read.parquet(dir)
+    val got = check(df) // parquet scan → codegen path
     // ...and the f32 value genuinely differs from the f64 fold in ulps
     // (guards against the kernel silently widening to double)
     def cosF64(a: Seq[Float], b: Seq[Float]): Double = {

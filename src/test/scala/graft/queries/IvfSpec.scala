@@ -50,8 +50,9 @@ class IvfSpec extends SparkSpec {
     val brute = TextQueries.queries("q_embed_topk")(spark, dir)
       .limit(8).as[(Long, Double)].collect().toSeq
     // probing every cell searches the whole corpus → identical ranking
+    // and, with the same f32 kernel, identical scores
     assert(ivf.map(_._1).take(8) === brute.map(_._1).take(8))
-    ivf.zip(brute).foreach { case ((_, a), (_, b)) => assert(math.abs(a - b) < 1e-9) }
+    ivf.zip(brute).foreach { case ((_, a), (_, b)) => assert(a === b) }
   }
 
   test("ivf recall: co-directional near-dup is found at nprobe = 1") {

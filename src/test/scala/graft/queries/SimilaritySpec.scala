@@ -8,12 +8,12 @@ class SimilaritySpec extends SparkSpec {
 
   private def vec(xs: Double*): Array[Float] = xs.map(_.toFloat).toArray
 
-  test("cosineCol matches hand computation") {
+  test("CosineF32 matches hand computation") {
     val df = Seq(
       (vec(1, 0, 0), vec(1, 0, 0)),
       (vec(1, 0, 0), vec(0, 1, 0)),
       (vec(1, 2, 3), vec(4, 5, 6))).toDF("a", "b")
-    val got = df.select(round(TextQueries.cosineCol($"a", $"b"), 6)).as[Double].collect()
+    val got = df.select(round(graft.functions.CosineF32($"a", $"b"), 6)).as[Double].collect()
     assert(got(0) === 1.0)
     assert(got(1) === 0.0)
     val expect = (4.0 + 10 + 18) / (math.sqrt(14) * math.sqrt(77))

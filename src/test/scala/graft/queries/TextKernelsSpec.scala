@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
   * — on a grammar-shaped corpus AND on adversarial edge texts (unicode
   * whose lowercase maps into ASCII, multi-byte code points, tabs,
   * repeated tokens, token counts straddling the shingle/gram minima).
-  * The full-query equivalence at sf0.001/0.01/0.1 is checked by
-  * `graft.tools.EquivCheck`; this spec pins the kernels on corpora the
-  * testdata does not cover.
+  * The md5 twins of these kernels are oracle-checked by DuckDB on the
+  * sf tables; this spec pins every kernel on corpora the tables do not
+  * cover.
   */
 class TextKernelsSpec extends SparkSpec {
 
