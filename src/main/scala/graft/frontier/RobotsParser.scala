@@ -10,8 +10,10 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * case-insensitive directives, `#` comments; directives outside any
   * user-agent group are ignored). The crawl pipeline
   * consumes the resulting (host, path_prefix, allowed) rules via the
-  * broadcast longest-prefix gate in [[Wave.robotsGate]] — parsing is a
-  * distributed flatMap over fetched robots.txt bodies.
+  * longest-prefix gate in [[Wave.robotsGate]] (the
+  * [[graft.functions.RobotsAllowed]] kernel behind a per-host join whose
+  * regime Spark picks by size) — parsing is a distributed flatMap over
+  * fetched robots.txt bodies.
   */
 object RobotsParser {
 
@@ -28,7 +30,7 @@ object RobotsParser {
     val specific = Seq.newBuilder[RobotsRule]
     val star = Seq.newBuilder[RobotsRule]
     var sawSpecificGroup = false
-    val wanted = agent.toLowerCase
+    val wanted = productToken(agent)
 
     robotsTxt.linesIterator.foreach { raw =>
       val line = raw.takeWhile(_ != '#').trim
@@ -42,14 +44,14 @@ object RobotsParser {
               if (!groupHasAgents) {
                 groupSpecific = false; groupStar = false; groupHasAgents = true
               }
-              val a = value.toLowerCase
-              if (a == "*") groupStar = true
-              // empty UA value must match nothing; match on product-token
-              // PREFIX (RFC 9309 product tokens), not substring — a group
-              // for an unrelated bot whose name merely appears inside this
-              // agent ('bot' vs 'graftbot') must not count as specific and
-              // silently suppress the `*` group's Disallow rules
-              else if (a.nonEmpty && (a == wanted || wanted.startsWith(a))) {
+              if (value == "*") groupStar = true
+              // RFC 9309 §2.2.1: the group is specific when its product
+              // token equals the agent's, case-insensitively. Neither a
+              // substring ('bot') nor a prefix ('g', 'graft') of
+              // 'graftbot' matches — such a group would silently suppress
+              // the `*` group's Disallow rules — and a versioned value
+              // ('GraftBot/1.0') does. An empty token matches nothing.
+              else if (wanted.nonEmpty && productToken(value) == wanted) {
                 groupSpecific = true
                 sawSpecificGroup = true
               }
@@ -66,13 +68,20 @@ object RobotsParser {
         }
       }
     }
-    // `wanted == "*"` only ever matches star groups, so sawSpecificGroup
-    // stays false and the default crawl reads the star rules as before
+    // agent `*` has an empty product token and only ever matches star
+    // groups, so sawSpecificGroup stays false and the default crawl
+    // reads the star rules
     val rules = if (sawSpecificGroup) specific.result() else star.result()
     // default-allow root so hosts with only Disallow rules still permit "/"
     if (rules.exists(r => r.path_prefix == "/" )) rules
     else rules :+ RobotsRule(host, "/", allowed = true)
   }
+
+  /** The leading product-token run `[A-Za-z_-]+`, lower-cased (RFC 9309
+    * §2.2.1); "" when the value does not start with one. */
+  private def productToken(agent: String): String =
+    agent.takeWhile(c => (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
+      c == '_' || c == '-').toLowerCase
 
   /** Distributed parse: (host STRING, robots_txt STRING) → rules table. */
   def parseTable(robotsPages: DataFrame, agent: String = "*"): DataFrame = {

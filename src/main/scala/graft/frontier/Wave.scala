@@ -31,27 +31,13 @@ object Wave {
         * not hardcoded (skew handling, SURVEY.md §8 hard-parts). */
       targetBucketRows: Long = 5000L,
       /** Politeness tokens for hosts absent from the budgets table. */
-      defaultTokens: Int = 8,
-      /** Shuffle parallelism for the salted repartition; 0 = leave to AQE. */
-      numPartitions: Int = 0,
-      /** Rule-host count above which the robots gate stops broadcasting
-        * the rules table and host-shuffle-joins instead. mp.weixin-shaped
-        * corpora have a handful of hosts (broadcast is free); a
-        * Common-Crawl 10^8-host rule set is multi-GB — unbroadcastable.
-        * The run loop measures the rules table ONCE per run (it is a
-        * snapshot-0 constant) and sets [[robotsShuffleJoin]]. */
-      robotsBroadcastMaxHosts: Long = 1000000L,
-      /** Force the scale-safe host-keyed shuffle join for robots rules
-        * (no broadcast anywhere in the gate). */
-      robotsShuffleJoin: Boolean = false)
+      defaultTokens: Int = 8)
 
   final case class WaveResult(
-      decisions: Dataset[FetchDecision],
       /** extracted articles INCLUDING the raw comments_json payload —
         * the one persisted extraction product per wave; typed comments
         * are a read-view ([[graft.frontier.ArticleStore.comments]]). */
       articles: DataFrame,
-      discovered: DataFrame,
       frontierNext: DataFrame,
       /** one row per URL fetched this wave: (wave, priority, url_hash,
         * url, host, partition_id) — serves both the seen-set delta and
@@ -76,24 +62,21 @@ object Wave {
   // ------------------------------------------------------------- robots
 
   /** Robots gating (J4/P3): longest-prefix-match per URL, default-allow
-    * when a host has no rules. The match is a higher-order `aggregate`
-    * over the per-host rules array — no UDF, no window.
+    * when a host has no rules. The match is the codegen kernel
+    * [[graft.functions.RobotsAllowed]] over the per-host rules array — no
+    * UDF, no window.
     *
-    * Join physics (two regimes, same semantics):
-    *   - `shuffleJoin=false` (default; mp.weixin-shaped corpora, few
-    *     hosts): rules pre-aggregated per host (tiny) and broadcast —
-    *     zero shuffle on the frontier, the gate rides the scan stage.
-    *   - `shuffleJoin=true` (Common-Crawl regime, ~10^8 rule hosts: the
-    *     aggregated rules table is multi-GB, unbroadcastable): host-keyed
-    *     shuffle join. The frontier pays one slim exchange; this is
-    *     strictly cheaper than semi-joining rules down to the wave's
-    *     host set first, which pays the same frontier exchange AND a
-    *     driver-serial broadcast build per wave.
-    * The crawl loop picks the regime once per run from the measured rule
-    * count vs [[WaveConfig.robotsBroadcastMaxHosts]].
+    * Join physics: the rules are pre-aggregated per host and left-joined
+    * with NO hint, so Spark's size-based join selection picks the
+    * regime from the rules table's estimated bytes. Under the crawl
+    * session's broadcast threshold an mp.weixin-shaped rule set (a
+    * handful of hosts) broadcasts and the gate rides the frontier scan
+    * stage; a Common-Crawl-sized one (~10^8 rule hosts, multi-GB) is
+    * above any threshold and runs as a spillable sort-merge join, so a
+    * large rule set is never broadcast. Same verdicts either way
+    * (PlanSpec, RobotsKernelSpec).
     */
-  def robotsGate(frontier: DataFrame, robots: DataFrame,
-      shuffleJoin: Boolean = false): (DataFrame, DataFrame) = {
+  def robotsGate(frontier: DataFrame, robots: DataFrame): (DataFrame, DataFrame) = {
     val rulesByHost = robots
       .groupBy(col("host"))
       .agg(collect_list(struct(col("path_prefix"), col("allowed"))).as("__rules"))
@@ -102,10 +85,7 @@ object Wave {
     val rawPath = try_parse_url(col("url"), lit("PATH"))
     val withPath = frontier.withColumn("__path",
       when(rawPath.isNull || rawPath === "", lit("/")).otherwise(rawPath))
-    val joined =
-      if (shuffleJoin)
-        withPath.hint("shuffle_hash").join(rulesByHost, Seq("host"), "left")
-      else withPath.join(broadcast(rulesByHost), Seq("host"), "left")
+    val joined = withPath.join(rulesByHost, Seq("host"), "left")
     // longest matching prefix wins; equal-length tie → allow wins (RFC
     // 9309 least-restrictive tie-break). The verdict is order-
     // independent: the result is (max matching len, "any allow rule at
@@ -192,11 +172,7 @@ object Wave {
         col("salt"))
       .as[BudgetRow]
 
-    val parted =
-      if (cfg.numPartitions > 0) annotated.repartition(cfg.numPartitions, col("host"), col("salt"))
-      else annotated.repartition(col("host"), col("salt"))
-
-    parted
+    annotated.repartition(col("host"), col("salt"))
       .sortWithinPartitions(col("host"), col("salt"), col("priority"), col("url_hash"))
       .mapPartitions { it =>
         val pid = TaskContext.getPartitionId()
@@ -240,11 +216,11 @@ object Wave {
     import spark.implicits._
     val DISK = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
-    // robots gate first (broadcast + filter — no shuffle, stays inside
-    // the frontier scan stage; shuffle-join regime for huge rule sets,
-    // see robotsGate). Gate-vs-dedupe order is immaterial: duplicates
+    // robots gate first (a small rule set broadcasts and the gate stays
+    // inside the frontier scan stage; a huge one sort-merge joins, see
+    // robotsGate). Gate-vs-dedupe order is immaterial: duplicates
     // share a canonical url, hence a robots verdict.
-    val (allowed, denied) = robotsGate(frontier, robots, cfg.robotsShuffleJoin)
+    val (allowed, denied) = robotsGate(frontier, robots)
     // ONE operator fuses first-wins in-batch dedupe (W3) with the shard-
     // aligned sketch probe (no broadcast state) — the wave's critical
     // path pays a single frontier shuffle (+ Spark's spillable sort)
@@ -346,7 +322,7 @@ object Wave {
       .unionByName(asLedger(dups, "duplicate", "seen"))
       .unionByName(asLedger(denied, "denied", "robots"))
 
-    WaveResult(decisions, articles, discovered, frontierNext,
+    WaveResult(articles, frontierNext,
       fetchedTbl, denied, ledger,
       cached = Seq(probed, flagged, decisions.toDF(), frontierNext))
   }

@@ -30,8 +30,6 @@ final case class FrontierEntry(
     priority: Long,
     discovered_ts: Timestamp)
 
-final case class SeenEntry(url_hash: Long, partition_id: Int, wave_added: Int)
-
 /** One extracted article. `comments_json` is the page's raw embedded
   * comments payload (store-raw-once: the typed comments table is a
   * parse-on-read view, [[graft.frontier.ArticleStore.comments]]). */
@@ -57,13 +55,12 @@ final case class ArticleComment(
 
 final case class RobotsRule(host: String, path_prefix: String, allowed: Boolean)
 
-/** Politeness budget. Tokens REFILL every wave by default — a "round"
-  * is the politeness window (per-host rate cap per crawl round, the
-  * upstream semantics). Checkpointed CARRYOVER is opt-in
-  * ([[graft.CrawlDriver.RunConfig.carryBudgets]]): unused tokens roll
-  * into the next wave, capped at one extra round, persisted per
-  * snapshot as `budget_state(host, carry)`. The streaming variant keeps
-  * rolling bucket state in GroupState instead. */
+/** Politeness budget. Tokens REFILL every wave — a "round" is the
+  * politeness window (per-host rate cap per crawl round, the upstream
+  * semantics); unused tokens do not carry over. The budgets table is a
+  * snapshot-0 run constant, so every wave and every resume reads the
+  * same checkpointed budgets. The streaming variant keeps rolling bucket
+  * state in GroupState instead. */
 final case class HostBudget(host: String, tokens_per_round: Int)
 
 /** G4 per-partition wave metrics — every field is aggregated from the

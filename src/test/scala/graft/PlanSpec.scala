@@ -89,19 +89,29 @@ class PlanSpec extends SparkSpec {
   }
 
   test("robots gate shuffle regime: no broadcast anywhere, verdicts identical") {
-    // Common-Crawl regime: the aggregated rules table is multi-GB —
-    // the gate must run without a broadcast and agree with the
-    // broadcast path row-for-row
+    // the gate's join carries no hint: Spark picks the regime by size.
+    // Under the crawl session's 128m threshold a small rule set
+    // broadcasts; a rule set above the threshold (Common-Crawl regime,
+    // multi-GB — forced here with threshold -1) must run with no
+    // broadcast at all and agree with the broadcast plan row for row
     val cfg = SynthConfig(nAccounts = 3, articlesPerAccount = 4, longTail = 30)
     val frontier = Synth.seedFrontier(spark, cfg).toDF()
     val robots = Synth.robots(spark, cfg).toDF()
-    val (aB, dB) = Wave.robotsGate(frontier, robots, shuffleJoin = false)
-    val (aS, dS) = Wave.robotsGate(frontier, robots, shuffleJoin = true)
-    val plan = planOf(aS)
-    assert(!plan.contains("BroadcastExchange") && !plan.contains("BroadcastHashJoin"),
-      s"shuffle regime must not broadcast:\n${plan.take(900)}")
-    assert(aS.exceptAll(aB).isEmpty && aB.exceptAll(aS).isEmpty, "allowed differ")
-    assert(dS.exceptAll(dB).isEmpty && dB.exceptAll(dS).isEmpty, "denied differ")
+    def gate(threshold: String): (String, Seq[String], Seq[String]) =
+      withConf("spark.sql.autoBroadcastJoinThreshold", threshold) {
+        val (a, d) = Wave.robotsGate(frontier, robots)
+        (planOf(a), a.collect().map(_.toString).sorted.toSeq,
+          d.collect().map(_.toString).sorted.toSeq)
+      }
+    val (planB, aB, dB) = gate("128m")
+    val (planS, aS, dS) = gate("-1")
+    assert(planB.contains("BroadcastHashJoin"),
+      s"a small rule set must broadcast:\n${planB.take(900)}")
+    assert(!planS.contains("BroadcastExchange") && !planS.contains("BroadcastHashJoin"),
+      s"shuffle regime must not broadcast:\n${planS.take(900)}")
+    assert(dB.nonEmpty, "the fixture must deny some urls for the comparison to bite")
+    assert(aS === aB, "allowed differ")
+    assert(dS === dB, "denied differ")
   }
 
   test("dedup queries shuffle the 8-byte hash, never the document text") {

@@ -23,4 +23,16 @@ abstract class SparkSpec extends AnyFunSuite {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Runs `body` with SQL conf `key` = `value`, then restores the
+    * session's previous setting (or unsets it). */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }

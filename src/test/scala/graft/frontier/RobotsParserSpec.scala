@@ -61,7 +61,7 @@ class RobotsParserSpec extends SparkSpec {
     assert(both2.contains(graft.model.RobotsRule("h", "/both/", false)))
   }
 
-  test("specific-group match is product-token prefix, not substring (r5 advice)") {
+  test("specific-group match is the exact product token (RFC 9309)") {
     // a group for an unrelated bot whose token merely appears INSIDE this
     // agent's name must NOT count as specific — under substring matching
     // it would silently suppress the * group's Disallow rules (over-crawl)
@@ -70,11 +70,17 @@ class RobotsParserSpec extends SparkSpec {
     assert(r.contains(graft.model.RobotsRule("h", "/", false)),
       "the * group's Disallow must survive an unrelated substring group")
     assert(!r.exists(_.path_prefix == "/other"))
-    // a true token PREFIX does match (RFC 9309 product-token matching)
-    val t2 = "User-agent: graft\nAllow: /mine\n\nUser-agent: *\nDisallow: /\n"
-    val r2 = RobotsParser.parse("h", t2, agent = "graftbot")
-    assert(r2.contains(graft.model.RobotsRule("h", "/mine", true)))
-    assert(!r2.exists(r => !r.allowed), "prefix-matched group replaces *")
+    // nor does a token PREFIX of the agent ('g', 'graft'): the * group
+    // still applies; the exact token, case-insensitive and with a
+    // version suffix, is specific and replaces *
+    Seq("g" -> false, "graft" -> false, "GraftBot/1.0" -> true, "GRAFTBOT" -> true)
+      .foreach { case (ua, specific) =>
+        val t2 = s"User-agent: $ua\nAllow: /mine\n\nUser-agent: *\nDisallow: /\n"
+        val r2 = RobotsParser.parse("h", t2, agent = "graftbot")
+        assert(r2.contains(graft.model.RobotsRule("h", "/mine", true)) === specific, ua)
+        assert(r2.contains(graft.model.RobotsRule("h", "/", false)) === !specific,
+          s"$ua: the * Disallow applies exactly when the group is not specific")
+      }
   }
 
   test("parsed rules drive the wave gate with longest-prefix-wins") {

@@ -89,46 +89,6 @@ class WaveSpec extends SparkSpec {
     }
   }
 
-  test("budget carryover: unused tokens roll forward (capped), state checkpointed") {
-    // a tight budget on every host: wave 0 (few list pages per host)
-    // underuses -> carry accrues; wave 1 (many details) can then burst
-    // up to tokens + carry, while the no-carry run stays at tokens
-    def drive(carry: Boolean): SnapshotCatalog = {
-      val dir = freshDir()
-      val catalog = new SnapshotCatalog(dir, spark)
-      val rc = CrawlDriver.RunConfig(dir, nWaves = 3, seenCapacity = 50000L,
-        nShards = 4, carryBudgets = carry)
-      val budgets = Seq((Synth.HotHost, 12)).toDF("host", "tokens_per_round")
-      CrawlDriver.init(spark, catalog, Synth.seedFrontier(spark, cfg).toDF(),
-        Synth.robots(spark, cfg).toDF(), budgets, rc)
-      CrawlDriver.run(spark, catalog, pagesIdx, rc)
-      catalog
-    }
-    val without = drive(carry = false)
-    val withC = drive(carry = true)
-    def fetchedAt(c: SnapshotCatalog, snap: Int): Long =
-      c.readTable(snap, "fetched").filter($"host" === Synth.HotHost).count()
-    // wave 0: 8 list pages on the hot host, budget 12 -> identical
-    assert(fetchedAt(without, 1) === fetchedAt(withC, 1))
-    val used0 = fetchedAt(withC, 1)
-    assert(used0 < 12, "wave 0 must underuse for this test to bite")
-    // checkpointed state after wave 0: carry = 12 - used, capped at 12
-    val carry1 = withC.readTable(1, "budget_state")
-      .filter($"host" === Synth.HotHost).select("carry").as[Int].head()
-    assert(carry1 === (12 - used0).toInt)
-    // wave 1: no-carry run is clamped to 12; carry run bursts to 12+carry
-    assert(fetchedAt(without, 2) === 12L)
-    assert(fetchedAt(withC, 2) === 12L + carry1,
-      "carry must extend the next wave's allowance exactly")
-    // burst is bounded: allowance never exceeds 2 rounds
-    (1 to withC.latest.get).foreach { s =>
-      val c = withC.readTable(s, "budget_state")
-        .filter($"host" === Synth.HotHost).select("carry").as[Int].head()
-      assert(c >= 0 && c <= 12)
-      assert(fetchedAt(withC, s) <= 24)
-    }
-  }
-
   test("no url is ever fetched twice (seen set is exact)") {
     val c = crawl(freshDir(), 4)
     val dupes = c.readDeltasUpTo(c.latest.get, "fetched")
